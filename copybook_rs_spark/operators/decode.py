@@ -60,16 +60,6 @@ TOKEN_SPARK_SCHEMA = StructType(
     ]
 )
 
-_TOKEN_PA_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("tokens", pa.list_(pa.int32())),
-        ("n_tok", pa.int32()),
-        ("source", pa.string()),
-    ]
-)
-
-
 _ALL_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
 # output-coalescer bounds (rows AND bytes) before the Arrow IPC return —
 # env-overridable so deployments (and scaling experiments) can tune the
@@ -384,10 +374,6 @@ def make_decode_kernel(
             yield from pa.Table.from_batches(buf).combine_chunks().to_batches()
 
     return kernel
-
-
-def decode_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    yield from make_decode_kernel(_ALL_COLUMNS, _TOKEN_PA_SCHEMA)(batches)
 
 
 def _resolve_columns(columns: list[str] | None, cfg) -> tuple[str, ...]:

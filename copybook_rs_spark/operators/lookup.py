@@ -32,24 +32,23 @@ contract, built from metadata the chunk table has carried since v1:
    simply left out of the plan and falls back to the all-parts bracket —
    slower, never wrong.
 
-At scale: pruning touches only the five narrow metadata columns (parquet
-column pruning keeps blobs out of the scan); the certified path yields
-O(1) candidate chunks per key; and when the candidate set is small it is
-collected and pushed into the blob scan as an `In(chunk_id)` filter, so
-parquet row-group stats skip the compressed bytes of every other chunk —
-they are never read, let alone decoded.  Larger candidate sets fall back
-to a semi-join (reads blob bytes, still decodes only candidates).
+At scale: with a known salt plan a request is ONE metadata query plus one
+decode. The query scans only the five narrow metadata columns in a single
+window pass and collects just the rows that hit a key (short key lists
+enter as literal predicates) or break the precondition below, checked over
+the whole table. The hit ids reach the blob scan as a pushed
+`In(chunk_id)` filter, so parquet row-group stats skip every other chunk's
+bytes; past the collect cap they stay a semi-join (blobs read, never
+decoded).
 
 Precondition (documented, and guarded where detectable): the chunk table
 must come from ONE encode run (or a lossless compaction of one).  A union
 of independent runs interleaves doc ranges within a part and breaks the
-zone map; `candidate_chunk_ids` raises a typed PipelineContractError on
+zone map; lookups and mutations raise a typed PipelineContractError on
 the detectable symptoms (duplicate chunk_seq, first_doc_id out of order).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterable
 
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
@@ -61,6 +60,9 @@ _META_COLS = ("chunk_id", "source", "part_id", "chunk_seq", "first_doc_id")
 # Collected-candidate cap: below it the chunk_id list rides into the scan
 # as a pushed In() filter; above it we keep the ids distributed.
 _MAX_COLLECTED = 100_000
+# Key lists up to this size enter the metadata query as literal
+# predicates; longer lists (and DataFrame keys) join as a broadcast relation.
+_MAX_LITERAL_KEYS = 128
 _SEARCH_BLOCK = 1 << 16
 
 
@@ -76,11 +78,14 @@ def prune_to_candidates(
     decoded). cand: any DataFrame with a chunk_id column."""
     cand = cand.select("chunk_id")
     ids = [r["chunk_id"] for r in cand.limit(max_collected + 1).collect()]
-    if not ids:
-        return chunk_df.limit(0)
-    if len(ids) <= max_collected:
-        return chunk_df.where(F.col("chunk_id").isin(ids))
-    return chunk_df.join(cand, "chunk_id", "left_semi")
+    return _prune(chunk_df, cand if len(ids) > max_collected else ids)
+
+
+def _prune(chunk_df: DataFrame, cand) -> DataFrame:
+    """cand: collected chunk ids (In() filter) or a chunk_id DataFrame."""
+    if isinstance(cand, DataFrame):
+        return chunk_df.join(cand.select("chunk_id"), "chunk_id", "left_semi")
+    return chunk_df.where(F.col("chunk_id").isin(cand)) if cand else chunk_df.limit(0)
 
 
 def recover_salt_plan(
@@ -93,39 +98,27 @@ def recover_salt_plan(
     every chunk of that source; uncertifiable sources are omitted (callers
     fall back to the all-parts bracket, which needs no S).
 
-    Cost: two driver-side collects bounded by n_samples x n_sources plus
-    one metadata-only certification job. Pass the result back into
-    lookup_docs(salts=...) to amortize across repeated lookups."""
+    Cost: three metadata-only collects (two bounded by n_samples x
+    n_sources, one certification pass; ~5 Spark jobs) — more than a whole
+    lookup. Pass the result back into lookup_docs(salts=...) to amortize
+    across repeated lookups."""
     meta = chunk_df.select("source", "part_id", "chunk_seq", "first_doc_id")
-    maxima = {
-        r["source"]: int(r["mp"])
-        for r in meta.groupBy("source").agg(F.max("part_id").alias("mp")).collect()
-    }
+    maxima = meta.groupBy("source").agg(F.max("part_id")).collect()
     # One witness per (source, part): the first chunk of parts 0..n_samples-1.
     # Those parts are non-empty whenever S is large (big S <=> big data), so
     # the sample constrains S from many residues at once.
-    samples = (
-        meta.where((F.col("chunk_seq") == 0) & (F.col("part_id") < n_samples))
-        .select(
-            "source", "part_id", salt_hash(F.col("first_doc_id")).alias("h")
-        )
-        .collect()
-    )
+    samples = meta.where((F.col("chunk_seq") == 0) & (F.col("part_id") < n_samples))
     by_src: dict[str, list[tuple[int, int]]] = {}
-    for r in samples:
+    for r in samples.select("*", salt_hash("first_doc_id").alias("h")).collect():
         by_src.setdefault(r["source"], []).append((int(r["h"]), int(r["part_id"])))
     plan: dict[str, int] = {}
-    for src, mp in maxima.items():
-        pairs = by_src.get(src)
-        if not pairs:
+    for src, mp in maxima:
+        if src not in by_src:
             continue
-        hs = np.array([h for h, _ in pairs], dtype=np.int64)
-        ps = np.array([p for _, p in pairs], dtype=np.int64)
-        lo = mp + 1
-        for start in range(lo, max_salt + 1, _SEARCH_BLOCK):
-            cands = np.arange(
-                start, min(start + _SEARCH_BLOCK, max_salt + 1), dtype=np.int64
-            )
+        hs, ps = np.array(by_src[src], dtype=np.int64).T
+        for start in range(mp + 1, max_salt + 1, _SEARCH_BLOCK):
+            stop = min(start + _SEARCH_BLOCK, max_salt + 1)
+            cands = np.arange(start, stop, dtype=np.int64)
             # np.int64 % positive divisor is Python-signed == Spark pmod
             ok = np.all(hs[None, :] % cands[:, None] == ps[None, :], axis=1)
             idx = np.nonzero(ok)[0]
@@ -137,64 +130,55 @@ def recover_salt_plan(
     # Certify against EVERY chunk of the claimed sources in one job: a
     # wrong S (ambiguous sample / foreign partitioner) leaves residues
     # that disagree somewhere; one disagreement disqualifies the source.
-    mapping = salt_mapping(plan)
-    bad = (
-        meta.where(F.col("source").isin(list(plan)))
-        .where(
-            F.pmod(salt_hash(F.col("first_doc_id")), mapping[F.col("source")])
-            != F.col("part_id")
-        )
-        .select("source")
-        .distinct()
-        .collect()
-    )
-    for r in bad:
+    wrong = F.pmod(
+        salt_hash(F.col("first_doc_id")), salt_mapping(plan)[F.col("source")]
+    ) != F.col("part_id")
+    bad = meta.where(F.col("source").isin(list(plan)) & wrong).select("source")
+    for r in bad.distinct().collect():
         del plan[r["source"]]
     return plan
 
 
-def _normalize_keys(chunk_df: DataFrame, keys) -> tuple[DataFrame, bool]:
-    """-> ((source, doc_id) keys DataFrame, had_source). Keys without a
-    source column are expanded across the table's distinct sources (low
-    cardinality by design — plan_salts already collects one driver row per
-    source), so downstream handling is uniform."""
+def _normalize_keys(chunk_df: DataFrame, keys):
+    """-> (ids, kdf, had_source). ids: sorted distinct doc ids of a key
+    list (None for DataFrame keys). kdf: the keys as a relation, only for
+    DataFrame keys and lists past _MAX_LITERAL_KEYS."""
     if isinstance(keys, DataFrame):
         if "doc_id" not in keys.columns:
             raise PipelineContractError(
-                "lookup keys must have a doc_id column "
-                f"(got {sorted(keys.columns)})"
+                f"lookup keys must have a doc_id column (got {sorted(keys.columns)})"
             )
-        had_source = "source" in keys.columns
-        kdf = keys.select(
-            *(["source", "doc_id"] if had_source else ["doc_id"])
-        ).distinct()
-    else:
-        ids = sorted({str(k) for k in keys})
-        kdf = chunk_df.sparkSession.createDataFrame(
-            [(i,) for i in ids], "doc_id string"
-        )
-        had_source = False
-    if not had_source:
-        kdf = chunk_df.select("source").distinct().crossJoin(kdf)
-    return kdf, had_source
+        cols = [c for c in ("source", "doc_id") if c in keys.columns]
+        return None, keys.select(*cols).distinct(), len(cols) == 2
+    ids = sorted({str(k) for k in keys})
+    if len(ids) <= _MAX_LITERAL_KEYS:
+        return ids, None, False
+    rel = [(i,) for i in ids]
+    return ids, chunk_df.sparkSession.createDataFrame(rel, "doc_id string"), False
 
 
 def _bracketed_meta(chunk_df: DataFrame, validate: bool) -> DataFrame:
-    """Chunk metadata + the zone-map right edge (next chunk's first doc).
-    validate=True additionally proves the single-run precondition's
-    detectable half: within every (source, part_id), chunk_seq strictly
-    ascends and first_doc_id never descends."""
-    meta = chunk_df.select(*_META_COLS)
+    """Chunk metadata + ONE window pass per (source, part_id): the zone-map
+    right edge `__next_first` and `__bad`, the single-run precondition's
+    detectable half (chunk_seq repeats or first_doc_id descends).
+    validate=True checks the whole table eagerly."""
     w = Window.partitionBy("source", "part_id").orderBy("chunk_seq")
+    bad = (F.col("chunk_seq") == F.lag("chunk_seq").over(w)) | (
+        F.col("first_doc_id") < F.lag("first_doc_id").over(w)
+    )
+    meta = chunk_df.select(
+        *_META_COLS,
+        F.coalesce(bad, F.lit(False)).alias("__bad"),
+        F.lead("first_doc_id").over(w).alias("__next_first"),
+    )
     if validate:
-        checked = meta.withColumn("__prev_first", F.lag("first_doc_id").over(w)) \
-            .withColumn("__prev_seq", F.lag("chunk_seq").over(w))
-        bad = checked.where(
-            (F.col("chunk_seq") == F.col("__prev_seq"))
-            | (F.col("first_doc_id") < F.col("__prev_first"))
-        ).take(1)
-        if bad:
-            r = bad[0]
+        _raise_if_bad(meta.where("__bad").take(1))
+    return meta
+
+
+def _raise_if_bad(rows) -> None:
+    for r in rows:
+        if r["__bad"]:
             raise PipelineContractError(
                 "chunk table violates the single-encode-run layout lookup "
                 f"relies on: group ({r['source']!r}, part {r['part_id']}) "
@@ -202,7 +186,63 @@ def _bracketed_meta(chunk_df: DataFrame, validate: bool) -> DataFrame:
                 f"{r['first_doc_id']!r} out of order — was this table a "
                 "union of independent encode runs? Decode + filter instead."
             )
-    return meta.withColumn("__next_first", F.lead("first_doc_id").over(w))
+
+
+def _hit_rows(meta: DataFrame, ids, kdf, had_source, salts) -> DataFrame:
+    """meta rows with `__k_doc` set per (chunk, key) zone-map hit, null
+    otherwise. Certified sources also need the key's hash part,
+    pmod(salt_hash(key), S[source]) == part_id, tested against the chunk's
+    OWN source, so keys need no per-source expansion."""
+    salts = {s: v for s, v in (salts or {}).items() if v and v > 0}
+    mapping = salt_mapping(salts)
+
+    def hit(doc):
+        got = (F.col("first_doc_id") <= doc) & (
+            F.col("__next_first").isNull() | (F.col("__next_first") >= doc)
+        )
+        if not salts or kdf is not None:  # relation keys: part via equi-join
+            return got
+        part = F.pmod(salt_hash(doc), mapping[F.col("source")])
+        return got & (~F.col("source").isin(list(salts)) | (part == F.col("part_id")))
+
+    no_key = F.lit(None).cast("string")
+    if kdf is None:  # literal keys: each key's salt hash folds at plan time
+        found = F.array(*[F.when(hit(F.lit(i)), F.lit(i)) for i in ids], no_key)
+        return meta.withColumn("__k_doc", F.explode_outer(F.array_compact(found)))
+    k = kdf.select(F.col("doc_id").alias("__k_doc"),
+                   *([F.col("source").alias("__k_src")] if had_source else []))
+    src_eq = F.col("source") == F.col("__k_src")
+    rows, rest, joins = meta.withColumn("__k_doc", no_key), meta, []
+    if salts:  # certified keys equi-join their one hash part
+        srcs = F.explode(F.array(*map(F.lit, sorted(salts))))
+        kc = k if had_source else k.withColumn("__k_src", srcs)
+        part = F.pmod(salt_hash(F.col("__k_doc")), mapping[F.col("__k_src")])
+        joins.append((meta, kc.withColumn("__k_part", part),
+                      src_eq & (F.col("part_id") == F.col("__k_part"))))
+        rest = meta.where(~F.col("source").isin(list(salts)))
+    joins.append((rest, k, src_eq if had_source else F.lit(True)))
+    for m, kk, on in joins:
+        hits = m.join(F.broadcast(kk), on & hit(F.col("__k_doc")))
+        rows = rows.unionByName(hits.select(*rows.columns))
+    return rows
+
+
+def _candidates(chunk_df, keys, salts, validate, max_collected):
+    """-> (ids, kdf, cand). Collects the fused metadata query ONCE: every
+    row that hits a key or (validate=True) breaks the layout anywhere in
+    the table. Raises on a violation; cand is the sorted candidate chunk
+    ids, or a chunk_id DataFrame when the hits exceed max_collected."""
+    ids, kdf, had_source = _normalize_keys(chunk_df, keys)
+    rows = _hit_rows(_bracketed_meta(chunk_df, False), ids, kdf, had_source, salts)
+    hit = F.col("__k_doc").isNotNull()
+    got = rows.where(hit | (F.col("__bad") & validate))
+    got = got.limit(max_collected + 1).collect()
+    over = len(got) > max_collected
+    if validate:  # past the cap, a violation may lie beyond the collect
+        _raise_if_bad(got + (rows.where("__bad").take(1) if over else []))
+    if over:
+        return ids, kdf, rows.where(hit).select("chunk_id").distinct()
+    return ids, kdf, sorted({r["chunk_id"] for r in got if r["__k_doc"] is not None})
 
 
 def candidate_hits(
@@ -212,49 +252,13 @@ def candidate_hits(
     validate: bool = True,
 ) -> DataFrame:
     """(chunk_id, __k_doc) pairs: for each requested (source, doc_id) key,
-    the chunks whose zone-map bracket can contain it — the shared pruning
-    core of candidate_chunk_ids (point lookup) and delete_docs (mutation),
-    which needs to know WHICH keys target each candidate chunk. Superset
-    semantics: a paired chunk may not actually hold the key."""
-    kdf, _ = _normalize_keys(chunk_df, keys)
+    the chunks whose zone-map bracket can contain it — the core
+    delete_docs (mutation) prunes with, as it needs to know WHICH keys
+    target each chunk; superset semantics. validate=True checks the whole
+    table's layout eagerly, so a mutation raises before any write."""
     meta = _bracketed_meta(chunk_df, validate)
-    k = kdf.select(
-        F.col("source").alias("__k_src"), F.col("doc_id").alias("__k_doc")
-    )
-    bracket = (F.col("first_doc_id") <= F.col("__k_doc")) & (
-        F.col("__next_first").isNull()
-        | (F.col("__next_first") >= F.col("__k_doc"))
-    )
-    salts = {k_: v for k_, v in (salts or {}).items() if v and v > 0}
-    parts = []
-    k_cert = k.where(F.col("__k_src").isin(list(salts))) if salts else None
-    if salts:
-        mapping = salt_mapping(salts)
-        k_exact = k_cert.withColumn(
-            "__k_part",
-            F.pmod(salt_hash(F.col("__k_doc")), mapping[F.col("__k_src")]).cast(
-                "int"
-            ),
-        )
-        parts.append(
-            meta.join(
-                F.broadcast(k_exact),
-                (meta["source"] == F.col("__k_src"))
-                & (meta["part_id"] == F.col("__k_part")),
-            ).where(bracket)
-        )
-        k_rest = k.where(~F.col("__k_src").isin(list(salts)))
-    else:
-        k_rest = k
-    parts.append(
-        meta.join(
-            F.broadcast(k_rest), meta["source"] == F.col("__k_src")
-        ).where(bracket)
-    )
-    hits = parts[0].select("chunk_id", "__k_doc")
-    for p in parts[1:]:
-        hits = hits.unionByName(p.select("chunk_id", "__k_doc"))
-    return hits
+    rows = _hit_rows(meta, *_normalize_keys(chunk_df, keys), salts)
+    return rows.where(F.col("__k_doc").isNotNull()).select("chunk_id", "__k_doc")
 
 
 def candidate_chunk_ids(
@@ -265,15 +269,16 @@ def candidate_chunk_ids(
 ) -> DataFrame:
     """Distinct chunk_ids that can contain the requested (source, doc_id)
     keys — a candidate SUPERSET in the data-skipping sense (kept chunks
-    may hold other docs; apply the exact key filter after decode).
+    may hold other docs; apply the exact key filter after decode). The
+    metadata query is collected here, so layout violations raise here.
 
     salts: encode-time S(source) plan (or recover_salt_plan output). For
     covered sources each key prunes to its ONE hash-assigned part; others
     bracket every part of the source. MUST be the exact encode plan —
     prefer recover_salt_plan, which certifies against the table."""
-    return candidate_hits(
-        chunk_df, keys, salts=salts, validate=validate
-    ).select("chunk_id").distinct()
+    _, _, cand = _candidates(chunk_df, keys, salts, validate, _MAX_COLLECTED)
+    return cand if isinstance(cand, DataFrame) else chunk_df.sparkSession \
+        .createDataFrame([(i,) for i in cand], "chunk_id string")
 
 
 def lookup_docs(
@@ -293,27 +298,22 @@ def lookup_docs(
 
     salts: pass recover_salt_plan(chunk_df) (or the encode-time plan) to
     prune each key to its single hash-assigned part; omitted -> recovered
-    automatically (three small metadata jobs — recover once and reuse for
-    repeated lookups against the same table).
+    per call (three more metadata collects: recover once and reuse it).
+    With salts, a request is one metadata query, collected here (layout
+    violations raise here), plus the decode of the candidate chunks: at
+    most 4 Spark jobs for a short key list.
 
     Returns the decoded rows under the usual decode column resolution
     (`columns` projects INTO the blob exactly like decode_tokens)."""
     from copybook_rs_spark.operators.decode import _resolve_columns, decode_tokens
 
-    kdf, had_source = _normalize_keys(chunk_df, keys)
     if salts is None:
         salts = recover_salt_plan(chunk_df)
-    cand = candidate_chunk_ids(chunk_df, kdf, salts=salts, validate=validate)
-    pruned = prune_to_candidates(chunk_df, cand, max_collected)
+    ids, kdf, cand = _candidates(chunk_df, keys, salts, validate, max_collected)
     want = list(_resolve_columns(columns, cfg))
-    dec_cols = (
-        None
-        if columns is None
-        else list(dict.fromkeys([*columns, "doc_id", "source"]))
-    )
-    dec = decode_tokens(pruned, columns=dec_cols, cfg=cfg)
-    join_on = ["source", "doc_id"] if had_source else ["doc_id"]
-    out = dec.join(
-        F.broadcast(kdf.select(*join_on).distinct()), join_on, "left_semi"
-    )
-    return out.select(*want)
+    dec_cols = None if columns is None else list(
+        dict.fromkeys([*columns, "doc_id", "source"]))
+    dec = decode_tokens(_prune(chunk_df, cand), columns=dec_cols, cfg=cfg)
+    if ids is not None:
+        return dec.where(F.col("doc_id").isin(ids)).select(*want)
+    return dec.join(F.broadcast(kdf), kdf.columns, "left_semi").select(*want)

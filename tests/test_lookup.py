@@ -15,10 +15,12 @@ from copybook_rs_spark.errors import PipelineContractError
 from copybook_rs_spark.operators import (
     candidate_chunk_ids,
     decode_tokens,
+    delete_docs,
     encode_tokens,
     lookup_docs,
     recover_salt_plan,
 )
+from copybook_rs_spark.operators.lookup import _MAX_LITERAL_KEYS
 from copybook_rs_spark.plans.partition import plan_salts
 from copybook_rs_spark.sources.tokens import token_table
 
@@ -168,3 +170,88 @@ def test_lookup_parquet_backed_pushes_in_filter(spark, tok_df, chunks, keys, tmp
     got = lookup_docs(stored, keys[:5], cfg=CFG, salts=salts)
     expected = tok_df.where(F.col("doc_id").isin(keys[:5]))
     assert _rows(got) == _rows(expected)
+
+
+def test_lookup_request_job_count(spark, chunks, keys):
+    # a request is one metadata query plus one decode; a per-request
+    # aggregate or a second validation pass coming back fails here
+    salts = recover_salt_plan(chunks)
+    sc = spark.sparkContext
+    group = "test-lookup-job-count"
+    sc.setJobGroup(group, "single-key lookup")
+    try:
+        rows = lookup_docs(chunks, [keys[3]], salts=salts).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["doc_id"] for r in rows] == [keys[3]]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+
+def _tok_df(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+
+
+def test_layout_validation_is_whole_table(spark, tmp_path):
+    # one "web" group is a union of two encode runs; the requested key
+    # brackets only into the intact source "books" (every web doc sorts
+    # after it), so only a whole-table check can see the broken group
+    cfg = EncodeConfig(
+        chunk_values=256, target_values_per_part=1024, shuffle_partitions=4
+    )
+    mk = lambda pfx, src, n: [  # noqa: E731
+        (f"{pfx}_{i:03d}", list(range(i % 30 + 1)), i % 30 + 1, src)
+        for i in range(n)
+    ]
+    run_a = encode_tokens(
+        _tok_df(spark, mk("wz", "web", 200) + mk("bk", "books", 200)), cfg
+    )
+    run_b = encode_tokens(_tok_df(spark, mk("wa", "web", 1)), cfg)
+    table = run_a.unionByName(run_b).cache()
+    try:
+        touched = candidate_chunk_ids(table, ["bk_005"], validate=False).collect()
+        assert touched and all(r["chunk_id"].startswith("books/") for r in touched)
+        with pytest.raises(PipelineContractError, match="single-encode-run"):
+            lookup_docs(table, ["bk_005"], cfg=cfg)
+        out = tmp_path / "deleted"
+        with pytest.raises(PipelineContractError, match="single-encode-run"):
+            delete_docs(table, ["bk_005"], cfg=cfg).write.parquet(str(out))
+        assert not out.exists()
+    finally:
+        table.unpersist()
+
+
+def test_literal_keys_match_decode_and_filter(spark):
+    # awkward strings must survive the literal predicates verbatim; tiny
+    # chunks put keys on cut edges and duplicate runs across cuts
+    odd = ["", "'", "o'brien", 'say "hi"', "back\\slash", "naïve", "日本語", "a\nb"]
+    rows = [
+        (d, [i, i + 1], 2, "web" if i % 3 else "books")
+        for i, d in enumerate(odd + [f"doc_{i:04d}" for i in range(400)])
+    ]
+    rows += [(f"dup_{i % 3}", list(range(i % 40 + 1)), i % 40 + 1, "web")
+             for i in range(120)]
+    cfg = EncodeConfig(
+        chunk_values=256, target_values_per_part=1024, shuffle_partitions=4
+    )
+    ch = encode_tokens(_tok_df(spark, rows), cfg).cache()
+    try:
+        edges = sorted(
+            r["first_doc_id"] for r in ch.select("first_doc_id").collect()
+            if r["first_doc_id"].startswith("doc_")
+        )
+        keys = odd + ["dup_1", edges[len(edges) // 2], "doc_missing"]
+        # one past the literal cap: the same keys take the broadcast path
+        rest = sorted({r[0] for r in rows} - set(keys))
+        wide = keys + rest[: _MAX_LITERAL_KEYS + 1 - len(keys)]
+        assert len(set(wide)) == _MAX_LITERAL_KEYS + 1
+        decoded = decode_tokens(ch, cfg=cfg)
+        for salts in (None, {}):
+            for ks in (keys, wide, [""]):
+                got = lookup_docs(ch, ks, cfg=cfg, salts=salts)
+                want = decoded.where(F.col("doc_id").isin(ks))
+                assert _rows(got) == _rows(want), (salts, len(ks))
+        assert len(_rows(lookup_docs(ch, keys, cfg=cfg))) == len(odd) + 40 + 1
+    finally:
+        ch.unpersist()
